@@ -179,7 +179,12 @@ def reading_records(root: str, sf) -> list[dict]:
     are pulled ONLY from text after the ``"queries_median"`` marker —
     if truncation cut that marker off, reconstruction would silently
     sum best-of-3 values from the ``queries`` dict instead, so a
-    marker-less tail degrades to no-heavy-anchor, ADVICE r10)."""
+    marker-less tail degrades to no-heavy-anchor, ADVICE r10).
+    History lines whose recorded ``latency_factor`` exceeds
+    ``LATENCY_FLAT_THRESHOLD`` are skipped: their medians were inflated
+    by ambient per-action latency, and as an anchor they would make a
+    real regression in the next reading read flat. Lines without the
+    field predate it and are kept."""
     import glob
     import re as _re
 
@@ -290,6 +295,9 @@ def reading_records(root: str, sf) -> list[dict]:
                 except ValueError:
                     continue
                 if d.get("sf") != sf:
+                    continue
+                lf = d.get("latency_factor")
+                if isinstance(lf, (int, float)) and lf > LATENCY_FLAT_THRESHOLD:
                     continue
                 ctm = d.get("canary_total_median")
                 htm = d.get("heavy_total_median")
@@ -624,6 +632,7 @@ def main() -> None:
                             "canary_total_median": canary_median,
                             "heavy_total_median": heavy_median,
                             "heavy_basis": HEAVY_BASIS,
+                            "latency_factor": latency_factor,
                             "value": total,
                         }
                     )

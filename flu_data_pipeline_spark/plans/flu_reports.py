@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from flu_data_pipeline_spark.concurrency import overlap
 from flu_data_pipeline_spark.plans.flu_tables import (
     FLU_CTES,
     _fixture_tables,
@@ -149,6 +150,49 @@ def _all_tables(spark: SparkSession):
         "healthcare": build_healthcare(rhino_pre, cr),
         "historics": build_historics(fluview),
     }
+
+
+def snapshot_tables(spark: SparkSession) -> dict[str, DataFrame]:
+    """The five derived tables, materialized: the serving snapshot.
+
+    Same builders as :func:`_all_tables`, but each table is computed
+    once and held as a local checkpoint, so the report plans over it
+    start from stored rows instead of re-deriving the tables. The
+    preprocessed RHINO frame and ``county_region`` are checkpointed once
+    each, because several tables read them. Checkpoints follow the
+    tables' dependencies and independent branches build concurrently:
+    ``historics`` (FluView only) alongside everything that reads RHINO,
+    ``temporal`` alongside ``county_region`` once the RHINO frame is
+    stored, and ``illness`` with ``healthcare`` once the dim is."""
+    rhino_raw, census, fluview = _fixture_tables(spark)
+
+    def rhino_tables():
+        rhino_pre = rhino_raw.localCheckpoint()
+
+        def region_tables():
+            # county_region is one partition (its surrogate key is a
+            # global row_number), but a checkpoint forgets that
+            # partitioning; coalesce(1) restores it, so healthcare's
+            # window and aggregate over the dim run without the two
+            # shuffles the lazy plan never had, and emit rows in the
+            # same order.
+            cr = build_county_region(census, rhino_pre).localCheckpoint().coalesce(1)
+            illness, healthcare = overlap(
+                spark,
+                lambda: build_illness(rhino_pre, cr, fluview).localCheckpoint(),
+                lambda: build_healthcare(rhino_pre, cr).localCheckpoint(),
+            )
+            return {"county_region": cr, "illness": illness, "healthcare": healthcare}
+
+        tables, temporal = overlap(
+            spark, region_tables, lambda: build_temporal(rhino_pre).localCheckpoint()
+        )
+        return {**tables, "temporal": temporal}
+
+    tables, historics = overlap(
+        spark, rhino_tables, lambda: build_historics(fluview).localCheckpoint()
+    )
+    return {**tables, "historics": historics}
 
 
 @register(

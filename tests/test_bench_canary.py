@@ -148,6 +148,26 @@ def test_records_history_heavy(tmp_path):
     assert all(r["kind"] == "history" for r in recs)
 
 
+def test_records_history_skips_latency_contaminated_lines(tmp_path):
+    # a reading taken while per-action latency was elevated must not
+    # become a prior anchor; lines predating latency_factor are kept
+    hot = bench.LATENCY_FLAT_THRESHOLD + 0.2
+    with open(tmp_path / ".bench_history.jsonl", "w") as fh:
+        fh.write(json.dumps({"sf": 0.1, "canary_total_median": 5.0}) + "\n")
+        fh.write(json.dumps({"sf": 0.1, "canary_total_median": 5.1,
+                             "latency_factor": 1.0}) + "\n")
+        fh.write(json.dumps({"sf": 0.1, "canary_total_median": 7.5,
+                             "heavy_total_median": 30.0,
+                             "latency_factor": hot}) + "\n")
+        fh.write(json.dumps({"sf": 0.1, "canary_total_median": 5.2,
+                             "latency_factor":
+                             bench.LATENCY_FLAT_THRESHOLD}) + "\n")
+    recs = bench.reading_records(str(tmp_path), 0.1)
+    assert [r["canary_total_median"] for r in recs] == [5.0, 5.1, 5.2]
+    _, cr, _ = bench.arbitrate(5.25, None, recs)
+    assert cr["ratio_vs_prev"] == round(5.25 / 5.2, 4)
+
+
 _CUR = object()  # sentinel: "the current ledger basis"
 
 

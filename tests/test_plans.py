@@ -488,8 +488,8 @@ def test_serving_truth_fingerprint_invalidation(spark):
     assert all(v == {1, 2, 3} for v in per.values())
 
 
-def test_overlap_order_and_error_propagation():
-    """_overlap (r11 wave 2, guide §2.6) must return thunk results in
+def test_overlap_order_and_error_propagation(spark):
+    """overlap (r11 wave 2, guide §2.6) must return thunk results in
     CALL order regardless of completion order (the serving evals zip
     level results back to their nprobe constants positionally), and a
     failing thunk's exception must reach the caller exactly as in the
@@ -499,7 +499,7 @@ def test_overlap_order_and_error_propagation():
 
     import pytest
 
-    from flu_data_pipeline_spark.plans.similarity_queries import _overlap
+    from flu_data_pipeline_spark.concurrency import overlap
 
     def slow():
         _time.sleep(0.2)
@@ -508,14 +508,42 @@ def test_overlap_order_and_error_propagation():
     def fast():
         return "fast"
 
-    assert _overlap(slow, fast) == ["slow", "fast"]
-    assert _overlap(fast) == ["fast"]
+    assert overlap(spark, slow, fast) == ["slow", "fast"]
+    assert overlap(spark, fast) == ["fast"]
 
     def boom():
         raise AssertionError("partition pruning did not engage")
 
     with pytest.raises(AssertionError, match="partition pruning"):
-        _overlap(fast, boom, slow)
+        overlap(spark, fast, boom, slow)
+
+
+def test_overlap_threads_keep_callers_job_group(spark):
+    """Jobs started on overlap's pool threads carry the job group of the
+    thread that called overlap, so per-request job accounting (a job
+    group around each request) sees the concurrent work too."""
+    import time
+
+    from flu_data_pipeline_spark.concurrency import overlap
+
+    sc = spark.sparkContext
+    group = "overlap-job-group-probe"
+    sc.setJobGroup(group, group)
+    try:
+        overlap(
+            spark,
+            lambda: spark.range(10).collect(),
+            lambda: spark.range(20).collect(),
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status tracker is fed asynchronously by the listener bus
+    deadline = time.monotonic() + 10
+    while (len(sc.statusTracker().getJobIdsForGroup(group)) < 2
+           and time.monotonic() < deadline):
+        time.sleep(0.05)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
 
 
 def test_aqe_coalesce_assertion_has_teeth(spark):
