@@ -35,6 +35,7 @@ library has no hard web-framework dependency.
 
 from __future__ import annotations
 
+import functools
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
@@ -129,82 +130,83 @@ def create_app(spark: SparkSession):
             rows, percent_cols=percent_cols, f3_cols=f3_cols, f1_cols=f1_cols
         )
 
+    def _json_route(payload):
+        """A report view: ``payload()``'s dict as JSON with 200, or any
+        failure (a failed snapshot build included) as ``{"error": ...}``
+        with 500."""
+
+        @functools.wraps(payload)
+        def view():
+            try:
+                return jsonify(payload()), 200
+            except Exception as e:
+                return jsonify({"error": str(e)}), 500
+
+        return view
+
     @app.route("/api/reports/weekly-trends")
+    @_json_route
     def weekly():
-        try:
-            tables = snapshot.tables()
-            data = _report(
-                weekly_trends(tables["temporal"], tables["illness"]),
-                percent_cols=("avg_percent_positive",),
-            )
-            summary = {}
-            if data:
-                summary = {
-                    "Latest Week": str(data[0]["week_end"])
-                    if data[0].get("week_end")
-                    else "N/A",
-                    "Avg County %": data[0].get("avg_percent_positive")
-                    or "N/A",
-                    "Illness Type": data[0]["respiratory_illness_type"],
-                }
-            return jsonify({"data": data, "summary": summary}), 200
-        except Exception as e:  # pragma: no cover
-            return jsonify({"error": str(e)}), 500
+        tables = snapshot.tables()
+        data = _report(
+            weekly_trends(tables["temporal"], tables["illness"]),
+            percent_cols=("avg_percent_positive",),
+        )
+        summary = {}
+        if data:
+            summary = {
+                "Latest Week": str(data[0]["week_end"])
+                if data[0].get("week_end")
+                else "N/A",
+                "Avg County %": data[0].get("avg_percent_positive") or "N/A",
+                "Illness Type": data[0]["respiratory_illness_type"],
+            }
+        return {"data": data, "summary": summary}
 
     @app.route("/api/reports/healthcare-impact")
+    @_json_route
     def healthcare():
-        try:
-            tables = snapshot.tables()
-            data = _report(
-                healthcare_impact(tables["healthcare"], tables["county_region"]),
-                percent_cols=(
-                    "avg_hospitalization_percent",
-                    "avg_er_visit_percent",
-                ),
-                f3_cols=("avg_hospital_to_er_ratio",),
-                f1_cols=("avg_population_density",),
-            )
-            summary = {
-                "ACH Regions": len(data),
-                "Total Counties": sum(
-                    d["counties_in_region"]
-                    for d in data
-                    if d.get("counties_in_region")
-                ),
-            }
-            return jsonify({"data": data, "summary": summary}), 200
-        except Exception as e:  # pragma: no cover
-            return jsonify({"error": str(e)}), 500
+        tables = snapshot.tables()
+        data = _report(
+            healthcare_impact(tables["healthcare"], tables["county_region"]),
+            percent_cols=("avg_hospitalization_percent", "avg_er_visit_percent"),
+            f3_cols=("avg_hospital_to_er_ratio",),
+            f1_cols=("avg_population_density",),
+        )
+        summary = {
+            "ACH Regions": len(data),
+            "Total Counties": sum(
+                d["counties_in_region"] for d in data if d.get("counties_in_region")
+            ),
+        }
+        return {"data": data, "summary": summary}
 
     @app.route("/api/reports/historical-summary")
+    @_json_route
     def historical():
-        try:
-            data = _report(
-                historical_summary(snapshot.tables()["historics"]),
-                percent_cols=(
-                    "peak_ili_percent",
-                    "average_wili_percent",
-                    "peak_vs_avg_diff",
+        data = _report(
+            historical_summary(snapshot.tables()["historics"]),
+            percent_cols=(
+                "peak_ili_percent",
+                "average_wili_percent",
+                "peak_vs_avg_diff",
+            ),
+        )
+        summary = {}
+        if data:
+            max_peak = max(
+                (
+                    float(d["peak_ili_percent"].rstrip("%"))
+                    for d in data
+                    if d.get("peak_ili_percent")
                 ),
+                default=0,
             )
-            if data:
-                max_peak = max(
-                    (
-                        float(d["peak_ili_percent"].rstrip("%"))
-                        for d in data
-                        if d.get("peak_ili_percent")
-                    ),
-                    default=0,
-                )
-                summary = {
-                    "Years Tracked": len(data),
-                    "Highest Peak": f"{max_peak:.2f}%",
-                }
-            else:
-                summary = {}
-            return jsonify({"data": data, "summary": summary}), 200
-        except Exception as e:  # pragma: no cover
-            return jsonify({"error": str(e)}), 500
+            summary = {
+                "Years Tracked": len(data),
+                "Highest Peak": f"{max_peak:.2f}%",
+            }
+        return {"data": data, "summary": summary}
 
     @app.route("/api/export/csv")
     def export_csv():

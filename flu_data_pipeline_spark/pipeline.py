@@ -40,14 +40,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from flu_data_pipeline_spark.plans import flu_fixtures as fx
-from flu_data_pipeline_spark.plans.flu_tables import (
-    build_county_region,
-    build_healthcare,
-    build_historics,
-    build_illness,
-    build_temporal,
-    preprocess_rhino,
-)
+from flu_data_pipeline_spark.plans.flu_tables import derive_tables, preprocess_rhino
 from flu_data_pipeline_spark.schemas import PRIMARY_KEYS, STAR_SCHEMA
 from flu_data_pipeline_spark.session import ensure_session_defaults
 from flu_data_pipeline_spark.sources.readers import fetch_to_landing, read_csv
@@ -56,17 +49,12 @@ from flu_data_pipeline_spark.sources.writers import (
     validate_primary_key,
 )
 
-#: (filename, fixture rows, fixture header) per source feed
-_FIXTURE_FEEDS = {
-    "rhino": ("rhino.csv", lambda: fx.RHINO_ROWS, fx.RHINO_COLS),
-    "census": ("census.csv", lambda: fx.CENSUS_ROWS, fx.CENSUS_COLS),
-    "fluview": ("fluview.csv", lambda: fx.FLUVIEW_ROWS, fx.FLUVIEW_COLS),
-}
-
-_RAW_SCHEMAS = {
-    "rhino": fx.RHINO_SCHEMA,
-    "census": fx.CENSUS_SCHEMA,
-    "fluview": fx.FLUVIEW_SCHEMA,
+#: (landing filename, fixture rows, raw schema) per source feed; the
+#: schema's field names are the CSV header
+_FEEDS = {
+    "rhino": ("rhino.csv", fx.RHINO_ROWS, fx.RHINO_SCHEMA),
+    "census": ("census.csv", fx.CENSUS_ROWS, fx.CENSUS_SCHEMA),
+    "fluview": ("fluview.csv", fx.FLUVIEW_ROWS, fx.FLUVIEW_SCHEMA),
 }
 
 
@@ -79,7 +67,7 @@ def collect(
     this is the reference's HTTP/REST pull; without, the embedded
     fixture snapshot is written driver-side (same shape, same headers —
     including the '1-Week Percent ' trailing space)."""
-    filename, rows, cols = _FIXTURE_FEEDS[name]
+    filename, rows, schema = _FEEDS[name]
     if fetchers and name in fetchers:
         url, fetcher = fetchers[name]
         return fetch_to_landing(url, landing_dir, filename, fetcher)
@@ -87,8 +75,8 @@ def collect(
     path = os.path.join(landing_dir, filename)
     with open(path, "w", newline="") as f:
         w = csv.writer(f)
-        w.writerow(cols)
-        w.writerows(rows())
+        w.writerow(schema.fieldNames())
+        w.writerows(rows)
     return path
 
 
@@ -97,19 +85,12 @@ def build_tables(
 ) -> dict[str, DataFrame]:
     """create_dataframe_tables (:320-461): schema-pinned scans of the
     landing files → the five derived tables as lazy Spark plans."""
-    rhino_pre = preprocess_rhino(
-        read_csv(spark, landing["rhino"], _RAW_SCHEMAS["rhino"])
+    def scan(name: str) -> DataFrame:
+        return read_csv(spark, landing[name], _FEEDS[name][2])
+
+    return derive_tables(
+        preprocess_rhino(scan("rhino")), scan("census"), scan("fluview")
     )
-    census = read_csv(spark, landing["census"], _RAW_SCHEMAS["census"])
-    fluview = read_csv(spark, landing["fluview"], _RAW_SCHEMAS["fluview"])
-    cr = build_county_region(census, rhino_pre)
-    return {
-        "county_region": cr,
-        "temporal": build_temporal(rhino_pre),
-        "illness": build_illness(rhino_pre, cr, fluview),
-        "healthcare": build_healthcare(rhino_pre, cr),
-        "historics": build_historics(fluview),
-    }
 
 
 def assert_schemas(tables: dict[str, DataFrame]) -> None:
@@ -183,7 +164,7 @@ def run_pipeline(
     """Execute the full DAG; returns the run report. Safe to re-run:
     the second invocation lands the same files and appends zero rows."""
     ensure_session_defaults(spark)
-    landing = {name: collect(name, landing_dir, fetchers) for name in _FIXTURE_FEEDS}
+    landing = {name: collect(name, landing_dir, fetchers) for name in _FEEDS}
     tables = build_tables(spark, landing)
     assert_schemas(tables)
     appended, observed = ingest(spark, tables, warehouse_dir)

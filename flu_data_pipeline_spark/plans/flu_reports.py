@@ -20,6 +20,7 @@ from flu_data_pipeline_spark.plans.flu_tables import (
     build_historics,
     build_illness,
     build_temporal,
+    derive_tables,
 )
 from flu_data_pipeline_spark.plans.registry import register
 
@@ -140,34 +141,22 @@ def format_report(rows: list[dict], percent_cols: tuple[str, ...] = (),
 # ---------------------------------------------------------------------------
 
 
-def _all_tables(spark: SparkSession):
-    rhino_pre, census, fluview = _fixture_tables(spark)
-    cr = build_county_region(census, rhino_pre)
-    return {
-        "county_region": cr,
-        "temporal": build_temporal(rhino_pre),
-        "illness": build_illness(rhino_pre, cr, fluview),
-        "healthcare": build_healthcare(rhino_pre, cr),
-        "historics": build_historics(fluview),
-    }
-
-
 def snapshot_tables(spark: SparkSession) -> dict[str, DataFrame]:
     """The five derived tables, materialized: the serving snapshot.
 
-    Same builders as :func:`_all_tables`, but each table is computed
-    once and held as a local checkpoint, so the report plans over it
-    start from stored rows instead of re-deriving the tables. The
-    preprocessed RHINO frame and ``county_region`` are checkpointed once
-    each, because several tables read them. Checkpoints follow the
+    Same builders as :func:`flu_tables.derive_tables`, but each table is
+    computed once and held as a local checkpoint, so the report plans
+    over it start from stored rows instead of re-deriving the tables.
+    The preprocessed RHINO frame and ``county_region`` are checkpointed
+    once each, because several tables read them. Checkpoints follow the
     tables' dependencies and independent branches build concurrently:
     ``historics`` (FluView only) alongside everything that reads RHINO,
     ``temporal`` alongside ``county_region`` once the RHINO frame is
     stored, and ``illness`` with ``healthcare`` once the dim is."""
-    rhino_raw, census, fluview = _fixture_tables(spark)
+    rhino_lazy, census, fluview = _fixture_tables(spark)
 
     def rhino_tables():
-        rhino_pre = rhino_raw.localCheckpoint()
+        rhino_pre = rhino_lazy.localCheckpoint()
 
         def region_tables():
             # county_region is one partition (its surrogate key is a
@@ -215,7 +204,7 @@ def snapshot_tables(spark: SparkSession) -> dict[str, DataFrame]:
     tags=("flu", "report", "J5", "A7", "A8", "A9", "A10", "O4", "O7"),
 )
 def flu_report_weekly_trends(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _all_tables(spark)
+    t = derive_tables(*_fixture_tables(spark))
     return weekly_trends(t["temporal"], t["illness"])
 
 
@@ -239,7 +228,7 @@ def flu_report_weekly_trends(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("flu", "report", "J6", "P6", "A7", "A8", "O5"),
 )
 def flu_report_healthcare_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _all_tables(spark)
+    t = derive_tables(*_fixture_tables(spark))
     return healthcare_impact(t["healthcare"], t["county_region"])
 
 
@@ -258,7 +247,7 @@ def flu_report_healthcare_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("flu", "report", "O6", "A12", "F14", "F15"),
 )
 def flu_report_historical_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _all_tables(spark)
+    t = derive_tables(*_fixture_tables(spark))
     return historical_summary(t["historics"])
 
 
@@ -269,5 +258,5 @@ def flu_report_historical_summary(spark: SparkSession, sf_dir: str) -> DataFrame
     tags=("flu", "S8", "S9", "O7"),
 )
 def flu_export_county_region(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _all_tables(spark)
+    t = derive_tables(*_fixture_tables(spark))
     return export_table(t, "county_region")

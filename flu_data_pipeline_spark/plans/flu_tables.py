@@ -257,6 +257,21 @@ def build_historics(fluview: DataFrame) -> DataFrame:
     )
 
 
+def derive_tables(
+    rhino_pre: DataFrame, census: DataFrame, fluview: DataFrame
+) -> dict[str, DataFrame]:
+    """The five derived tables as lazy plans over the three preprocessed
+    feeds (create_dataframe_tables, flu_data_airflow_v2.py:320-461)."""
+    cr = build_county_region(census, rhino_pre)
+    return {
+        "county_region": cr,
+        "temporal": build_temporal(rhino_pre),
+        "illness": build_illness(rhino_pre, cr, fluview),
+        "healthcare": build_healthcare(rhino_pre, cr),
+        "historics": build_historics(fluview),
+    }
+
+
 # ---------------------------------------------------------------------------
 # DuckDB oracle: same derivations, declarative SQL over the same fixtures
 # ---------------------------------------------------------------------------
@@ -415,9 +430,7 @@ def flu_temporal(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("flu", "J2", "J3", "F9", "D2"),
 )
 def flu_illness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    rhino_pre, census, fluview = _fixture_tables(spark)
-    cr = build_county_region(census, rhino_pre)
-    return build_illness(rhino_pre, cr, fluview)
+    return derive_tables(*_fixture_tables(spark))["illness"]
 
 
 @register(
@@ -428,9 +441,7 @@ def flu_illness(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("flu", "J4", "A2", "A3", "F10", "F11", "F12"),
 )
 def flu_healthcare(spark: SparkSession, sf_dir: str) -> DataFrame:
-    rhino_pre, census, _ = _fixture_tables(spark)
-    cr = build_county_region(census, rhino_pre)
-    return build_healthcare(rhino_pre, cr)
+    return derive_tables(*_fixture_tables(spark))["healthcare"]
 
 
 @register(
@@ -485,9 +496,7 @@ def flu_historics(spark: SparkSession, sf_dir: str) -> DataFrame:
 def flu_pipeline_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = fx.rhino_df(spark)
     rhino_pre, census, fluview = _fixture_tables(spark)
-    cr = build_county_region(census, rhino_pre)
-    tmp = build_temporal(rhino_pre)
-    ill = build_illness(rhino_pre, cr, fluview)
+    t = derive_tables(rhino_pre, census, fluview)
 
     def stage(name: str, df: DataFrame) -> DataFrame:
         return df.agg(
@@ -510,8 +519,8 @@ def flu_pipeline_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 rhino_pre.filter(F.col("pct_cleaned").isNull()),
             )
         )
-        .unionByName(stage("county_region", cr))
-        .unionByName(stage("temporal", tmp))
-        .unionByName(stage("illness", ill))
+        .unionByName(stage("county_region", t["county_region"]))
+        .unionByName(stage("temporal", t["temporal"]))
+        .unionByName(stage("illness", t["illness"]))
         .orderBy("stage")
     )

@@ -13,7 +13,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+#: one shuffle partition per local core
+DEFAULT_SHUFFLE_PARTITIONS = _CPUS
 
 #: Correctness- and perf-load-bearing confs that are runtime-settable
 #: (`spark.conf.set` on an already-built session). Every registered query
@@ -23,7 +25,8 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 #: nanos handling) behaves identically to one from :func:`get_spark`.
 ENGINE_RUNTIME_CONFS: dict[str, str] = {
     # parquet TIMESTAMP(NANOS) (events.ts) is otherwise unreadable: read
-    # as long ns-since-epoch; catalog.load_table converts to timestamp.
+    # as long ns-since-epoch; catalog.load_table converts to timestamp
+    # (integer div by 1000 — no double round-trip).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Pin date/timestamp semantics so results hash-match the DuckDB
     # oracle regardless of host timezone.
@@ -40,7 +43,13 @@ ENGINE_RUNTIME_CONFS: dict[str, str] = {
     # pushFilters; Spark 4.1 hard-fails such readers unless the planner
     # gate is on.
     "spark.sql.python.filterPushdown.enabled": "true",
-    # Broadcast only truly small build sides (see get_spark rationale).
+    # Broadcast only truly small build sides. A fat threshold forces
+    # fact-sized tables through a serial driver-side broadcast build —
+    # measurably slower than a parallel shuffle join even at sf0.1 — and
+    # would OOM the driver outright at cluster scale. Known-small dims
+    # are broadcast explicitly (F.broadcast) in the plans; AQE's runtime
+    # join re-selection can still upgrade a shuffle join whose
+    # post-filter build side turns out tiny.
     "spark.sql.autoBroadcastJoinThreshold": str(2 * 1024 * 1024),
     # Let AQE rewrite a sort-merge join to a shuffled-hash join at
     # runtime when EVERY post-shuffle partition is under this bound
@@ -54,8 +63,13 @@ ENGINE_RUNTIME_CONFS: dict[str, str] = {
     # unaffected.
     "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold":
         str(64 * 1024 * 1024),
-    # InferFiltersFromGenerate pushes full generator expressions below
-    # repartitions into the scan (measured 17x on HOF-heavy explodes).
+    # InferFiltersFromGenerate synthesizes size(<explode input>)>0 /
+    # isnotnull filters; predicate pushdown then substitutes the FULL
+    # generator expression and pushes it below repartitions to the scan —
+    # for HOF-heavy explode inputs (shingle/hash pipelines) that
+    # re-evaluates the whole chain a second time, serially on the scan's
+    # partitioning (measured 17x slowdown at sf0.1). Our explode inputs
+    # are never mostly-empty, so the rule only hurts.
     "spark.sql.optimizer.excludedRules":
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
 }
@@ -107,62 +121,24 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.
 
-    - AQE on: runtime coalescing of post-shuffle partitions, skew-join
-      splitting, and dynamic join-strategy switching — the knobs that make a
-      fixed plan survive a 100x scale-up.
-    - ``spark.sql.session.timeZone=UTC``: pins date/timestamp semantics so
-      results hash-match oracles regardless of host TZ.
-    - ANSI mode off: ``CAST('junk' AS DOUBLE)`` yields null (reference
-      semantics for its percent cleaner) instead of raising.
-    - Arrow enabled: fast createDataFrame/toPandas and pandas UDFs.
+    The runtime confs (UTC timezone, ANSI off, Arrow, broadcast and join
+    thresholds, …) come from :data:`ENGINE_RUNTIME_CONFS`, the same map
+    :func:`ensure_session_defaults` applies to sessions built elsewhere.
+    AQE (post-shuffle partition coalescing, skew-join splitting, runtime
+    join re-selection) is on by Spark's defaults. This builder adds only
+    the launch-time settings: master, shuffle partitions, driver memory,
+    no UI and the JIT code-cache size.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(master or f"local[{_CPUS}]")
+        .config(map=ENGINE_RUNTIME_CONFS)
         .config(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
         )
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
-        # parquet TIMESTAMP(NANOS) (events.ts) is otherwise unreadable:
-        # read as long ns-since-epoch; catalog.load_table converts to
-        # timestamp (integer div by 1000 — no double round-trip).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.parquet.datetimeRebaseModeInRead", "CORRECTED")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
-        # Broadcast only truly small build sides. A fat threshold forces
-        # fact-sized tables through a serial driver-side broadcast build —
-        # measurably slower than a parallel shuffle join even at sf0.1 —
-        # and would OOM the driver outright at cluster scale. Known-small
-        # dims are broadcast explicitly (F.broadcast) in the plans; AQE's
-        # runtime join re-selection can still upgrade a shuffle join whose
-        # post-filter build side turns out tiny.
-        .config("spark.sql.autoBroadcastJoinThreshold", str(2 * 1024 * 1024))
-        # AQE SMJ->SHJ rewrite from ACTUAL post-shuffle partition sizes
-        # (see ENGINE_RUNTIME_CONFS for the rationale + measurements)
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            str(64 * 1024 * 1024),
-        )
-        # InferFiltersFromGenerate synthesizes size(<explode input>)>0 /
-        # isnotnull filters; predicate pushdown then substitutes the FULL
-        # generator expression and pushes it below repartitions to the
-        # scan — for HOF-heavy explode inputs (shingle/hash pipelines)
-        # that re-evaluates the whole chain a second time, serially on
-        # the scan's partitioning (measured 17x slowdown at sf0.1). Our
-        # explode inputs are never mostly-empty, so the rule only hurts.
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
         # Whole-stage codegen emits one compiled class per stage; a session
         # that executes hundreds of distinct queries (the registry sweep,
         # the 41-query bench) overflows the JVM's default 240 MB code

@@ -39,6 +39,14 @@ def test_runtime_confs_recovered_on_stock_session(spark_stock):
     assert s.conf.get("spark.sql.shuffle.partitions") == "7"
 
 
+def test_get_spark_session_reads_every_runtime_conf(spark):
+    """A get_spark session carries every runtime conf from the start.
+    ensure_session_defaults skips sessions whose sentinel conf is already
+    set, so a conf get_spark missed would never be applied."""
+    for key, value in ENGINE_RUNTIME_CONFS.items():
+        assert spark.conf.get(key) == value, key
+
+
 def test_events_nanos_readable_on_stock_session(spark_stock):
     s = stockify(spark_stock)
     ev = load_table(s, SF_ORACLE, "events")
